@@ -11,7 +11,8 @@ deterministic across partitionings and parallelism levels.
 Lineage from the loop is cut with ``localCheckpoint`` each round (on a real
 cluster: ``checkpoint`` to the cluster FS / an Iceberg stage table — see
 ``plans/pipeline.py``); convergence is detected by an edge-set checksum, one
-cheap aggregate per round.
+cheap aggregate per round, and a run that hits ``max_iterations`` first
+raises rather than return unconverged labels.
 
 Singletons: the reference keeps every record that entered any block as its own
 component (``graph_visualization.py:54-59``); ``assign_components`` takes the
@@ -118,6 +119,11 @@ def connected_components(
     of recomputing the input chain — the recovery story a days-long CC run
     over a 10^12-edge graph needs.  Convergence still uses the bit_xor
     checksum, recomputed from the loaded round on resume.
+
+    Raises ``RuntimeError`` naming the round count when ``max_iterations``
+    rounds pass without convergence: unconverged labels would silently
+    split components.  Rounds already persisted to ``checkpoint_dir`` stay
+    resumable.
     """
     spark = edges.sparkSession
     e = edges.select(
@@ -144,6 +150,11 @@ def connected_components(
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} "
+            "rounds; raise max_iterations"
+        )
     # Converged: every edge is (member, root). Roots map to themselves.
     members = e.select(F.col("src").alias("record_id"), F.col("dst").alias("component_id"))
     roots = e.select(F.col("dst").alias("record_id")).distinct().withColumn(

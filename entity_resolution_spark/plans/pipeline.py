@@ -16,6 +16,7 @@ Stage graph (each stage a DataFrame; reference lifecycle ``manager.py:28-102``):
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -27,7 +28,6 @@ from ..operators import blocking, components, evaluate, pairs
 
 @dataclass
 class ERConfig:
-    title_feature: str = "title"
     stages: list[blocking.BlockingStage] = field(
         default_factory=lambda: [blocking.BlockingStage("title", "phonetic_combination")]
     )
@@ -37,32 +37,56 @@ class ERConfig:
     salt_buckets: int | None = None
 
 
-def extract(pages: DataFrame, re_extract: bool = True) -> DataFrame:
-    """Add record_id and (re-)derive text deterministically from html.
+def extract(pages: DataFrame) -> DataFrame:
+    """Add record_id and re-derive text deterministically from html.
 
     Column pruning note: downstream stages must never carry ``html``; select
     narrow immediately after this stage.
     """
-    df = pages.withColumn("record_id", F.xxhash64("url"))
-    if re_extract:
-        df = df.withColumn("text", T.extract_text_udf(F.col("html")))
-    return df.withColumn("title", T.title_of(F.col("text")))
+    return (
+        pages.withColumn("record_id", F.xxhash64("url"))
+        .withColumn("text", T.extract_text_udf(F.col("html")))
+        .withColumn("title", T.title_of(F.col("text")))
+    )
 
 
-def resolve(pages: DataFrame, cfg: ERConfig | None = None) -> DataFrame:
-    """pages → (record_id, url, component_id) entity assignment."""
+def _build(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+    return build()
+
+
+def resolve(
+    pages: DataFrame,
+    cfg: ERConfig | None = None,
+    stage: Callable[[str, Callable[[], DataFrame]], DataFrame] = _build,
+) -> DataFrame:
+    """pages → (record_id, url, component_id) entity assignment.
+
+    ``stage(name, build)`` wraps every stage; the default just calls
+    ``build()``.  Pass ``StageCheckpointer.stage`` to persist each stage
+    (``00_extract`` … ``04_components``) and resume a run from the
+    completed ones.
+    """
     cfg = cfg or ERConfig()
-    recs = extract(pages).select("record_id", "url", "title")
-    blocks = blocking.block(
-        recs, cfg.stages, max_block_size=cfg.max_block_size
+    recs = stage(
+        "00_extract", lambda: extract(pages).select("record_id", "url", "title")
     )
-    edges = pairs.edge_weights(
-        blocks, with_provenance=cfg.with_provenance, salt_buckets=cfg.salt_buckets
+    blocks = stage(
+        "01_block",
+        lambda: blocking.block(recs, cfg.stages, max_block_size=cfg.max_block_size),
     )
-    pruned = pairs.prune(edges, cfg.prune_threshold)
-    assignment = components.assign_components(
-        recs.select("record_id"),
-        pruned.select(F.col("id1").alias("src"), F.col("id2").alias("dst")),
+    edges = stage(
+        "02_edges",
+        lambda: pairs.edge_weights(
+            blocks, with_provenance=cfg.with_provenance, salt_buckets=cfg.salt_buckets
+        ),
+    )
+    pruned = stage("03_pruned", lambda: pairs.prune(edges, cfg.prune_threshold))
+    assignment = stage(
+        "04_components",
+        lambda: components.assign_components(
+            recs.select("record_id"),
+            pruned.select(F.col("id1").alias("src"), F.col("id2").alias("dst")),
+        ),
     )
     return recs.select("record_id", "url").join(assignment, "record_id")
 

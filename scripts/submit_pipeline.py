@@ -31,17 +31,14 @@ def main() -> None:
     # launchers.
     from entity_resolution_spark import entrypoints
     from entity_resolution_spark.plans import pipeline
-    from entity_resolution_spark.plans.checkpoint import (
-        StageCheckpointer,
-        resolve_checkpointed,
-    )
+    from entity_resolution_spark.plans.checkpoint import StageCheckpointer
 
     entrypoints.ensure_shipped(spark)
     pages = spark.read.parquet(pages_path)
     t0 = time.perf_counter()
     if ckpt_dir:
         ckpt = StageCheckpointer(spark, ckpt_dir, "submit")
-        assignment = resolve_checkpointed(pages, ckpt)
+        assignment = pipeline.resolve(pages, stage=ckpt.stage)
     else:
         assignment = pipeline.resolve(pages)
     assignment.write.mode("overwrite").parquet(out_path)

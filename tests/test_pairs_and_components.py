@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.operators import blocking, components, pairs
@@ -143,9 +144,11 @@ def test_cc_durable_checkpoint_resume(spark, tmp_path):
     for p in rounds:
         assert os.path.exists(os.path.join(d_full, p, "_SUCCESS"))
 
-    # interrupted run: only 1 star round, then "the driver dies"
+    # interrupted run: only 1 star round, which stops with the convergence
+    # error (as if the driver died there)
     d = str(tmp_path / "resume")
-    components.connected_components(e, max_iterations=1, checkpoint_dir=d)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        components.connected_components(e, max_iterations=1, checkpoint_dir=d)
     partial_rounds = sorted(p for p in os.listdir(d) if p.startswith("round_"))
     assert partial_rounds == ["round_0000", "round_0001"]
 
@@ -162,3 +165,11 @@ def test_cc_durable_checkpoint_resume(spark, tmp_path):
     assert resumed == baseline
     resumed_rounds = sorted(p for p in os.listdir(d) if p.startswith("round_"))
     assert len(resumed_rounds) > 2 and resumed_rounds[2] == "round_0002"
+
+
+def test_cc_unconverged_raises(spark):
+    """Reaching max_iterations before the edge set stops changing is a
+    contract error naming the round count, never unconverged labels."""
+    e = spark.createDataFrame([(i, i + 1) for i in range(1, 20)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        components.connected_components(e, max_iterations=1)
